@@ -290,3 +290,23 @@ def test_input_handling_parity():
         Options(min_extracted_size=0, min_output_size=0),
     )
     assert result == "Äffin"  # NFC-normalized output
+
+
+def test_deep_nesting_output_matches_shallow():
+    """The serializer walks an explicit stack, so nesting far past the
+    recursion limit (~1000) gives exactly the shallow page's output; a
+    readability-tier page keeps its nesting in the output tree, where the
+    recursive serializer raised RecursionError at depth 1000."""
+    from trafilatura_spark.kernel.settings import DEFAULT_OPTIONS
+    from trafilatura_spark.operators.extract import extract_one_result
+
+    for options in (DEFAULT_OPTIONS, DEFAULT_OPTIONS.copy(format="markdown")):
+        for shape in (
+            lambda d: "<div>" * d + f"<ul><li>{LONG_1}</li><li>{LONG_2}</li></ul>" + "</div>" * d,
+            lambda d: "<div>" * d + f"<p>{LONG_1}</p><p>{LONG_2}</p>" + "</div>" * d,
+        ):
+            shallow = extract_one_result(wrap(shape(50)), options, timeout=None)
+            assert shallow.tier not in ("error", "timeout") and shallow.text
+            for depth in (2000, 5000):
+                deep = extract_one_result(wrap(shape(depth)), options, timeout=None)
+                assert (deep.text, deep.tier) == (shallow.text, shallow.tier), (options.format, depth)

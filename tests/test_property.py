@@ -231,22 +231,119 @@ def test_ttf_cmap_inversion_total_with_sfnt_prefix(data):
     assert isinstance(_ttf_unicode_by_gid(font), dict)
 
 
-@given(html_fragment())
-@settings(max_examples=150, deadline=None)
-def test_subtree_link_info_equivalence(fragment):
-    """The fused link-density walk must agree exactly with the three
-    separate scans it replaced (text_content / findall('.//ref') /
-    find('.//graphic')) on arbitrary converted trees."""
-    from trafilatura_spark.kernel.cleaning import _subtree_link_info, convert_tags
+def _converted_tree(fragment):
+    from trafilatura_spark.kernel.cleaning import convert_tags
     from trafilatura_spark.kernel.loader import load_html
     from trafilatura_spark.kernel.settings import DEFAULT_OPTIONS
 
     tree = load_html("<html><body><div id='x'>" + fragment + "</div></body></html>")
     if tree is None:
+        return None
+    return convert_tags(tree, DEFAULT_OPTIONS)  # produces <ref>/<graphic> vocabulary
+
+
+def _assert_stats_match_scans(elem, stats):
+    from trafilatura_spark.kernel.cleaning import collect_link_info
+    from trafilatura_spark.kernel.textutils import trim
+
+    text = elem.text_content()
+    refs = elem.findall(".//ref")
+    assert stats.length == len(trim(text))
+    assert stats.commas == text.count(",")
+    assert stats.counts.get("ref", 0) == len(refs)
+    assert ("graphic" in stats.counts) == (elem.find(".//graphic") is not None)
+    linklen, filled, short, _ = collect_link_info(refs)
+    assert (stats.link_chars, stats.links_filled, stats.links_short) == (linklen, filled, short)
+
+
+@given(html_fragment())
+@settings(max_examples=150, deadline=None)
+def test_fold_subtree_equivalence(fragment):
+    """The one-pass subtree fold must agree exactly with a separate scan
+    of every element's subtree (text_content / findall('.//ref') /
+    find('.//graphic')) on arbitrary converted trees."""
+    from trafilatura_spark.kernel.subtree import fold_subtree
+
+    tree = _converted_tree(fragment)
+    if tree is None:
         return
-    tree = convert_tags(tree, DEFAULT_OPTIONS)  # produces <ref>/<graphic> vocabulary
-    for root in [tree] + tree.findall(".//ref")[:3] + [tree.find(".//cell") or tree]:
-        text, links, has_graphic = _subtree_link_info(root)
-        assert text == root.text_content()
-        assert links == root.findall(".//ref")
-        assert has_graphic == (root.find(".//graphic") is not None)
+    seen = []
+
+    def visit(elem, stats):
+        _assert_stats_match_scans(elem, stats)
+        seen.append(elem)
+        return False
+
+    fold_subtree(tree, (), visit, key_elems=set(tree.iter()), counted={"ref", "graphic"}, link_tag="ref")
+    assert seen == list(tree.iter())[::-1]  # reverse document order
+
+
+@given(html_fragment(), st.integers(0, 2**16))
+@settings(max_examples=150, deadline=None)
+def test_fold_subtree_deletions_match_rescans(fragment, seed):
+    """Keys deleted during the fold leave their ancestors' stats exactly as
+    a rescan of the mutated tree gives them (tails kept in place)."""
+    from trafilatura_spark.kernel.dom import delete_element
+    from trafilatura_spark.kernel.subtree import fold_subtree
+
+    tree = _converted_tree(fragment)
+    if tree is None:
+        return
+
+    def visit(elem, stats):
+        _assert_stats_match_scans(elem, stats)
+        if elem.getparent() is not None and (len(elem.tag) + seed + stats.length) % 3 == 0:
+            delete_element(elem)
+            return True
+        return False
+
+    fold_subtree(tree, ("div", "p", "list", "item", "table", "hi"), visit, counted={"ref", "graphic"}, link_tag="ref")
+
+
+def _splice_one_by_one(tree, matches):
+    "The splice-per-match algorithm splice_matches replaced: deepest first, stable."
+    def depth(el):
+        d, p = 0, el.getparent()
+        while p is not None and p is not tree:
+            d, p = d + 1, p.getparent()
+        return d
+
+    for el in sorted(matches, key=lambda el: -depth(el)):
+        parent = el.getparent()
+        if parent is None:
+            continue
+        idx = parent.index(el)
+        prev = parent[idx - 1] if idx > 0 else None
+
+        def append_text(s):
+            if s:
+                if prev is not None:
+                    prev.tail = (prev.tail or "") + s
+                else:
+                    parent.text = (parent.text or "") + s
+
+        parent.remove(el)
+        append_text(el.text)
+        for pos, child in enumerate(list(el), idx):
+            el.remove(child)
+            parent.insert(pos, child)
+            prev = child
+        append_text(el.tail)
+
+
+@given(html_fragment(), st.sets(st.sampled_from(TAGS)))
+@settings(max_examples=150, deadline=None)
+def test_splice_matches_equals_one_by_one(fragment, tags):
+    """The one-pass splice builds exactly the tree a splice per match
+    builds, texts and tails included; spliced elements end detached."""
+    from trafilatura_spark.kernel.dom import splice_matches, tostring_debug
+
+    tree = parse_html(f"<html><body><div>{fragment}</div></body></html>")
+    if tree is None:
+        return
+    expected = tree.copy_tree()
+    _splice_one_by_one(expected, [el for el in expected.iterdescendants() if el.tag in tags])
+    matches = [el for el in tree.iterdescendants() if el.tag in tags]
+    splice_matches(tree, matches)
+    assert tostring_debug(tree) == tostring_debug(expected)
+    assert all(el.getparent() is None and len(el) == 0 for el in matches)

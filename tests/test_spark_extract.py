@@ -180,3 +180,22 @@ def test_assemble_conversations_null_role_keeps_turn(spark):
     out = assemble_conversations(df, role_col="role").collect()[0]
     assert out.conversation_text == "user: hi\n\norphan line"
     assert out.n_turns == 2 and out.n_kept == 2
+
+
+def test_tier_metrics_twin_types_match_spark(spark):
+    """The DuckDB twin of extract_tier_metrics returns the column types the
+    Spark query returns: SUM over an INTEGER column is HUGEINT in DuckDB
+    but bigint in Spark, so the twin casts it (a hash gate compares the
+    typed values)."""
+    import duckdb
+    from pyspark.sql.types import LongType
+
+    from trafilatura_spark.queries import ORACLE_SQL, extract_tier_metrics
+
+    spark_types = {f.name: f.dataType for f in extract_tier_metrics(spark, "").schema.fields}
+    assert spark_types["n_turns"] == LongType()
+    assert spark_types["total_chars"] == LongType()
+    described = duckdb.connect().execute("DESCRIBE " + ORACLE_SQL["extract_tier_metrics"]).fetchall()
+    duck_types = {row[0]: row[1] for row in described}
+    assert duck_types["n_turns"] == "BIGINT"
+    assert duck_types["total_chars"] == "BIGINT"

@@ -19,7 +19,9 @@ from .settings import (
     MANUALLY_CLEANED,
     MANUALLY_STRIPPED,
     Options,
+    check_deadline,
 )
+from .subtree import fold_subtree
 from .textutils import LINK_FARM_RATIO, is_image_element, textfilter, trim
 
 REND_TAG_MAPPING = {
@@ -35,6 +37,7 @@ CODE_INDICATORS = ["{", '("', "('", "\n    "]
 
 def tree_cleaning(tree: Element, options: Options) -> Element:
     "Prune unwanted elements (htmlprocessing.py:47-82)."
+    check_deadline(options)
     cleaning_list, stripping_list = MANUALLY_CLEANED.copy(), MANUALLY_STRIPPED.copy()
     if not options.tables:
         cleaning_list.extend(["table", "td", "th", "tr"])
@@ -65,6 +68,7 @@ def tree_cleaning(tree: Element, options: Options) -> Element:
             strip_matches.append(element)
         if t in delete_set:
             by_tag[t].append(element)
+    check_deadline(options)
     _splice_all(tree, strip_matches)
 
     def _apply_deletes() -> None:
@@ -82,6 +86,7 @@ def tree_cleaning(tree: Element, options: Options) -> Element:
             tree = tcopy
     else:
         _apply_deletes()
+    check_deadline(options)
 
     return prune_html(tree, options.focus)
 
@@ -123,48 +128,6 @@ def prune_unwanted_nodes(
     return tree
 
 
-def _subtree_link_info(root: Element) -> tuple[str, list[Element], bool]:
-    """One doc-order walk replacing the three separate subtree scans the
-    link-density predicates need (``text_content()`` + ``findall('.//ref')``
-    + ``find('.//graphic')``): returns (inner text, descendant <ref>
-    elements in document order, whether any descendant <graphic> exists).
-    Byte-identical text to ``root.text_content()``; same node list as
-    ``findall`` (descendants only, nested refs included)."""
-    parts: list = []
-    links: list[Element] = []
-    has_graphic = False
-    emit = parts.append
-    stack: list = []
-    children = root._children
-    for i in range(len(children) - 1, -1, -1):
-        c = children[i]
-        if c.tail:
-            stack.append(c.tail)
-        stack.append(c)
-    if root.text:
-        stack.append(root.text)
-    pop = stack.pop
-    while stack:
-        item = pop()
-        if item.__class__ is str:
-            emit(item)
-            continue
-        tag = item.tag
-        if tag == "ref":
-            links.append(item)
-        elif tag == "graphic":
-            has_graphic = True
-        children = item._children
-        for i in range(len(children) - 1, -1, -1):
-            c = children[i]
-            if c.tail:
-                stack.append(c.tail)
-            stack.append(c)
-        if item.text:
-            stack.append(item.text)
-    return "".join(parts), links, has_graphic
-
-
 def collect_link_info(links: list[Element]) -> tuple[int, int, int, list[str]]:
     "Heuristics on link text (htmlprocessing.py:115-123)."
     mylist = [e for e in (trim(elem.text_content()) for elem in links) if e]
@@ -173,86 +136,139 @@ def collect_link_info(links: list[Element]) -> tuple[int, int, int, list[str]]:
     return sum(lengths), len(mylist), shortelems, mylist
 
 
-def link_density_test(
-    element: Element, text: str, favor_precision: bool = False,
-    links: Optional[list[Element]] = None,
-) -> tuple[bool, list[str]]:
-    """Boilerplate predicate for link-rich sections (htmlprocessing.py:126-172).
+def _is_last_child(element: Element) -> bool:
+    "``element.getnext() is None`` without the sibling index scan."
+    parent = element.getparent()
+    return parent is None or parent[-1] is element
 
-    ``links`` may carry the pre-collected descendant <ref> list from
-    ``_subtree_link_info`` (the graphic early-exit is then the caller's
-    job); with the default None the original self-contained scans run."""
-    if links is None:
-        links = element.findall(".//ref")
-        if not links:
-            return False, []
-        if element.find(".//graphic") is not None:
-            return False, []
-    mylist: list[str] = []
-    if len(links) == 1:
+
+def _link_density_verdict(
+    element: Element, elemlen: int, nlinks: int, linklen: int, elemnum: int, shortelems: int,
+    favor_precision: bool,
+) -> tuple[bool, bool]:
+    """The decision of link_density_test (htmlprocessing.py:126-172) over
+    link aggregates: ``elemlen`` is the trimmed text length, ``nlinks`` the
+    number of descendant <ref>s, and ``linklen``/``elemnum``/``shortelems``
+    the collect_link_info figures.  Returns (boilerplate?, whether the
+    reference's link-text list comes back non-empty)."""
+    if nlinks == 1:
+        # the one link's trimmed text is the whole of linklen
         len_threshold = 10 if favor_precision else 100
-        link_text = trim(links[0].text_content())
-        if len(link_text) > len_threshold and len(link_text) > len(text) * 0.9:
-            return True, []
+        if linklen > len_threshold and linklen > elemlen * 0.9:
+            return True, False
     if element.tag == "p":
-        limitlen = 60 if element.getnext() is None else 30
-    elif element.getnext() is None:
+        limitlen = 60 if _is_last_child(element) else 30
+    elif _is_last_child(element):
         limitlen = 300
     else:
         limitlen = 100
-    elemlen = len(text)
     if elemlen < limitlen:
-        linklen, elemnum, shortelems, mylist = collect_link_info(links)
         if elemnum == 0:
-            return True, mylist
+            return True, False
         if linklen > elemlen * 0.8 or (elemnum > 1 and shortelems / elemnum > 0.8):
-            return True, mylist
-    elif len(links) > 4:
-        linklen, elemnum, _, farmlist = collect_link_info(links)
-        if linklen > len(text) * LINK_FARM_RATIO and linklen < 100 * elemnum:
-            return True, farmlist
-    return False, mylist
+            return True, True
+        return False, True
+    if nlinks > 4 and linklen > elemlen * LINK_FARM_RATIO and linklen < 100 * elemnum:
+        return True, True
+    return False, False
+
+
+def link_density_test(
+    element: Element, text: str, favor_precision: bool = False
+) -> tuple[bool, list[str]]:
+    """Boilerplate predicate for link-rich sections (htmlprocessing.py:126-172),
+    ``text`` being the element's trimmed text.  Scans the element's own
+    subtree; delete_by_link_density takes the same decision from one fold."""
+    links = element.findall(".//ref")
+    if not links or element.find(".//graphic") is not None:
+        return False, []
+    linklen, elemnum, shortelems, mylist = collect_link_info(links)
+    result, listed = _link_density_verdict(
+        element, len(text), len(links), linklen, elemnum, shortelems, favor_precision
+    )
+    return result, mylist if listed else []
+
+
+_LINK_COUNTED = frozenset(("ref", "graphic"))
+
+
+def link_dense_tables(tree: Element) -> list[Element]:
+    """The tables of ``tree`` (itself included), in document order, that
+    are link-dense boilerplate (htmlprocessing.py:175-189).  One
+    fold_subtree walk: O(n) however deeply the tables nest."""
+    found: list = []
+    if next(tree.iter("table"), None) is None:
+        return found
+
+    def visit(elem: Element, stats) -> bool:
+        if stats.counts.get("ref"):
+            elemlen = stats.length
+            if elemlen >= 200:
+                linklen = stats.link_chars
+                if linklen > 0.8 * elemlen if elemlen < 1000 else linklen > 0.5 * elemlen:
+                    found.append(elem)
+        return False
+
+    fold_subtree(tree, ("table",), visit, counted=_LINK_COUNTED, link_tag="ref")
+    found.reverse()
+    return found
 
 
 def link_density_test_tables(element: Element) -> bool:
     "Boilerplate predicate for link-rich tables (htmlprocessing.py:175-189)."
-    text, links, _ = _subtree_link_info(element)
-    if not links:
-        return False
-    elemlen = len(trim(text))
-    if elemlen < 200:
-        return False
-    linklen, _, _, _ = collect_link_info(links)
-    return linklen > 0.8 * elemlen if elemlen < 1000 else linklen > 0.5 * elemlen
+    return element in link_dense_tables(element)
 
 
 def delete_by_link_density(
     subtree: Element, tagname: str, backtracking: bool = False, favor_precision: bool = False
 ) -> Element:
-    "Delete elements identified as link-dense boilerplate (htmlprocessing.py:192-221)."
-    deletions = []
+    """Delete elements identified as link-dense boilerplate
+    (htmlprocessing.py:192-221).  Every ``tagname`` element is judged on
+    the tree as it was before any deletion; only those with a <ref>
+    descendant can be deleted, and one fold_subtree walk gives all of
+    their figures: O(n) in the subtree size."""
+    # the candidates: ancestors of a <ref> with the tag, each chain climbed
+    # once (a node with no <ref> descendant is never deleted:
+    # link_density_test returns (False, []) and backtracking requires a
+    # non-empty link-text list)
+    climbed: set = set()
+    candidates: set = set()
+    for ref in subtree.iterdescendants("ref"):
+        node = ref.getparent()
+        while node is not None and node not in climbed:
+            climbed.add(node)
+            if node.tag == tagname:
+                candidates.add(node)
+            if node is subtree:
+                break
+            node = node.getparent()
+    if not candidates:
+        return subtree
+
+    deletions: list = []
     len_threshold = 200 if favor_precision else 100
     depth_threshold = 1 if favor_precision else 3
 
-    for elem in subtree.iter(tagname):
-        # fused single walk; a node with no <ref> descendants can never be
-        # deleted (link_density_test returns (False, []) and backtracking
-        # requires a non-empty templist), so its text is never needed
-        text, links, has_graphic = _subtree_link_info(elem)
-        if not links or has_graphic:
-            continue
-        elemtext = trim(text)
-        result, templist = link_density_test(elem, elemtext, favor_precision, links)
+    def visit(elem: Element, stats) -> bool:
+        if "graphic" in stats.counts:
+            return False
+        elemlen = stats.length
+        result, listed = _link_density_verdict(
+            elem, elemlen, stats.counts["ref"], stats.link_chars, stats.links_filled,
+            stats.links_short, favor_precision,
+        )
         if result or (
-            backtracking and templist and 0 < len(elemtext) < len_threshold and len(elem) >= depth_threshold
+            backtracking and listed and 0 < elemlen < len_threshold and len(elem) >= depth_threshold
         ):
             parent = elem.getparent()
             # paragraph holding a list item's content: keep (GH #788 in reference)
-            if tagname == "p" and parent is not None and parent.tag in ("item", "td", "th"):
-                continue
-            deletions.append(elem)
+            if not (tagname == "p" and parent is not None and parent.tag in ("item", "td", "th")):
+                deletions.append(elem)
+        return False
 
-    for elem in dict.fromkeys(deletions):
+    fold_subtree(subtree, (), visit, key_elems=candidates, counted=_LINK_COUNTED, link_tag="ref")
+    # visited in reverse document order; delete in document order
+    for elem in reversed(deletions):
         delete_element(elem)
 
     return subtree
@@ -306,17 +322,34 @@ def process_node(elem: Element, options: Options) -> Optional[Element]:
 
 
 # --- tag conversion (htmlprocessing.py:286-447) ------------------------------
+#
+# Lists, <pre> and <details> convert things in their whole subtree.  They
+# are converted in document order, so an enclosing element of the same
+# kind has already converted everything inside a nested one, whose own
+# walk would find nothing left (no conversion creates li/dd/dt, hljs
+# spans or summaries).  Each walk therefore records the same-kind
+# elements it passes in ``covered``, and those skip their walk: one walk
+# per outermost element, O(n) where a walk each is O(n * depth).
 
-def _convert_lists(elem: Element) -> None:
+_LIST_TAGS = frozenset(("dl", "ol", "ul"))
+
+
+def _convert_lists(elem: Element, covered: set) -> None:
     elem.set("rend", elem.tag)
     elem.tag = "list"
+    if elem in covered:
+        return
     i = 1
-    for subelem in elem.iterdescendants("dd", "dt", "li"):
-        if subelem.tag in ("dd", "dt"):
-            subelem.set("rend", f"{subelem.tag}-{i}")
-            if subelem.tag == "dd":
-                i += 1
-        subelem.tag = "item"
+    for subelem in elem.iterdescendants():
+        tag = subelem.tag
+        if tag in _LIST_TAGS:
+            covered.add(subelem)
+        elif tag in ("dd", "dt", "li"):
+            if tag != "li":
+                subelem.set("rend", f"{tag}-{i}")
+                if tag == "dd":
+                    i += 1
+            subelem.tag = "item"
 
 
 def _is_code_text(text: Optional[str]) -> bool:
@@ -325,42 +358,52 @@ def _is_code_text(text: Optional[str]) -> bool:
     return any(ind in text for ind in CODE_INDICATORS)
 
 
-def _convert_quotes(elem: Element) -> None:
+def _convert_quotes(elem: Element, covered: set) -> None:
     code_flag = False
     if elem.tag == "pre":
         if len(elem) == 1 and elem[0].tag == "span":
             code_flag = True
-        code_elems = [
-            e for e in elem.iterdescendants("span") if (e.get("class") or "").startswith("hljs")
-        ]
-        if code_elems:
-            code_flag = True
-            for subelem in code_elems:
-                subelem.attrib.clear()
+        if elem not in covered:
+            code_elems = []
+            for subelem in elem.iterdescendants():
+                if subelem.tag == "span":
+                    if (subelem.get("class") or "").startswith("hljs"):
+                        code_elems.append(subelem)
+                elif subelem.tag == "pre":
+                    covered.add(subelem)
+            if code_elems:
+                code_flag = True
+                for subelem in code_elems:
+                    subelem.attrib.clear()
         if _is_code_text(elem.text):
             code_flag = True
     elem.tag = "code" if code_flag else "quote"
 
 
-def _convert_headings(elem: Element) -> None:
+def _convert_headings(elem: Element, covered: set) -> None:
     rend = elem.tag
     elem.attrib.clear()
     elem.set("rend", rend)
     elem.tag = "head"
 
 
-def _convert_deletions(elem: Element) -> None:
+def _convert_deletions(elem: Element, covered: set) -> None:
     elem.tag = "del"
     elem.set("rend", "overstrike")
 
 
-def _convert_details(elem: Element) -> None:
+def _convert_details(elem: Element, covered: set) -> None:
     elem.tag = "div"
-    for subelem in elem.iterdescendants("summary"):
-        subelem.tag = "head"
+    if elem in covered:
+        return
+    for subelem in elem.iterdescendants():
+        if subelem.tag == "summary":
+            subelem.tag = "head"
+        elif subelem.tag == "details":
+            covered.add(subelem)
 
 
-def _convert_lb(elem: Element) -> None:
+def _convert_lb(elem: Element, covered: set) -> None:
     elem.tag = "lb"
 
 
@@ -410,6 +453,7 @@ def convert_tags(tree: Element, options: Options, url: Optional[str] = None) -> 
     splice set and the conversion set are exactly what the original
     per-pass scans collected (earlier passes never retag another pass's
     candidates)."""
+    check_deadline(options)
     if not options.links:
         # links under div/li/p (and tables if on) become bare <ref>, rest
         # spliced out — the keep/strip decision is one walk; the splice
@@ -427,6 +471,7 @@ def convert_tags(tree: Element, options: Options, url: Optional[str] = None) -> 
             else:
                 strip_a.append(elem)
         _splice_all(tree, strip_a)
+        check_deadline(options)
     else:
         # relative targets absolutized against the page host (convert_link,
         # htmlprocessing.py:376-385); ref elements included so the fallback
@@ -466,10 +511,12 @@ def convert_tags(tree: Element, options: Options, url: Optional[str] = None) -> 
                 rend_matches.append(elem)
         elif tag in CONVERSIONS:
             conv_matches.append(elem)
+    check_deadline(options)
     if rend_matches:
         _splice_all(tree, rend_matches)
+    covered: set = set()
     for elem in conv_matches:
-        CONVERSIONS[elem.tag](elem)
+        CONVERSIONS[elem.tag](elem, covered)
 
     if options.images:
         for elem in tree.iterdescendants("img"):

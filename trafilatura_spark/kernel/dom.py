@@ -353,10 +353,8 @@ def strip_tags(tree: Element, *tags: str) -> None:
     """Remove matching elements but keep their text and children, spliced
     into the parent at the element's position (lxml etree.strip_tags).
 
-    Single traversal; depth is computed per MATCH from its parent chain
-    (matches are few, so the walk itself carries no per-node depth
-    tuples) and matches splice deepest-first in stable document order,
-    so nested matches are handled without rescanning."""
+    One traversal collects the matches; splice_matches removes them all,
+    nested ones included, in one more pass."""
     tagset = frozenset(t for group in tags for t in ([group] if isinstance(group, str) else group))
     matches: list = []
     stack = tree._children[::-1]
@@ -373,49 +371,72 @@ def strip_tags(tree: Element, *tags: str) -> None:
 
 
 def splice_matches(tree: Element, matches: list) -> None:
-    """Splice a pre-collected doc-order element list (strip_tags body):
-    deepest-first, stable within a depth level."""
+    """Splice a pre-collected list of ``tree``'s descendants (strip_tags
+    body): each match is replaced by its text, children and tail, and
+    text runs that end up adjacent are concatenated.
+
+    The result is the one a splice per match gives, deepest first: every
+    surviving element keeps its place, and each text slot (an element's
+    text, a survivor's tail) gets, in document order, the texts and tails
+    of the matches flattened after it.  It is built in one pass per parent
+    that loses a child, with joins instead of repeated concatenation, so
+    the whole splice is O(n) for n elements.  (A splice per match costs
+    O(n^2) on a chain of nested matches, such as unclosed inline tags:
+    the parent's text is rebuilt once per level.)  Spliced elements are
+    left detached and childless with their own text and tail."""
     if not matches:
         return
-    if len(matches) > 1:
-        depths = []
-        for el in matches:
-            d = 0
-            p = el._parent
-            while p is not None and p is not tree:
-                d += 1
-                p = p._parent
-            depths.append(-d)
-        matches = [el for _, el in sorted(zip(depths, matches), key=lambda pair: pair[0])]
+    # a match already detached is not spliced (its matched children are)
+    matched = {el for el in matches if el._parent is not None}
+    if not matched:
+        return
+    parents = {}  # the surviving parents of matches, in first-seen order
     for el in matches:
-        if el._parent is not None:
-            _splice(el)
+        parent = el._parent
+        if parent is not None and parent not in matched:
+            parents[parent] = None
+    for parent in parents:
+        _flatten_matches(parent, matched)
+    for el in matched:
+        el._parent = None
+        el._children = []
 
 
-def _splice(el: Element) -> None:
-    "Replace el by its own text + children + tail inside its parent."
-    parent = el._parent
-    idx = parent._children.index(el)
-    prev = parent._children[idx - 1] if idx > 0 else None
-
-    def _append_text(s: Optional[str]) -> None:
-        if not s:
-            return
-        nonlocal prev
-        if prev is not None:
-            prev.tail = (prev.tail or "") + s
+def _flatten_matches(parent: Element, matched: set) -> None:
+    """Rebuild ``parent``'s children with every matched child (and matched
+    descendant of one) replaced by its content."""
+    children: list = []
+    slot = parent  # whose text slot receives the next pieces: parent.text, else slot.tail
+    pieces: list = []
+    stack: list = parent._children[::-1]
+    pop = stack.pop
+    push = stack.append
+    while stack:
+        item = pop()
+        if item.__class__ is str:
+            pieces.append(item)
+        elif item in matched:
+            if item.tail:
+                push(item.tail)
+            stack.extend(item._children[::-1])
+            if item.text:
+                push(item.text)
         else:
-            parent.text = (parent.text or "") + s
+            _append_pieces(parent, slot, pieces)
+            item._parent = parent
+            children.append(item)
+            slot, pieces = item, []
+    _append_pieces(parent, slot, pieces)
+    parent._children = children
 
-    parent.remove(el)
-    _append_text(el.text)
-    pos = idx
-    for child in list(el._children):
-        el.remove(child)
-        parent.insert(pos, child)
-        pos += 1
-        prev = child
-    _append_text(el.tail)
+
+def _append_pieces(parent: Element, slot: Element, pieces: list) -> None:
+    if not pieces:
+        return
+    if slot is parent:
+        parent.text = (parent.text or "") + "".join(pieces)
+    else:
+        slot.tail = (slot.tail or "") + "".join(pieces)
 
 
 def strip_elements(tree: Element, *tags: str, with_tail: bool = True) -> None:

@@ -80,8 +80,10 @@ def _forum_thread_page(tree: Element) -> bool:
 
 def _prepare_tree(tree: Element, options: Options, url: Optional[str]) -> tuple:
     cleaned = tree_cleaning(tree.copy_tree(), options)
+    check_deadline(options)
     backup = cleaned.copy_tree()
     cleaned = convert_tags(cleaned, options, url)
+    check_deadline(options)
     return cleaned, backup
 
 
@@ -91,7 +93,9 @@ def _sanitize_fallback_tree(tree: Element, options: Options) -> tuple:
     if not options.links:
         strip_tags(cleaned_tree, "a")
     strip_tags(cleaned_tree, "span")
+    check_deadline(options)
     cleaned_tree = convert_tags(cleaned_tree, options, options.url)
+    check_deadline(options)
     seen_group_elems: set = set()
     for tr in cleaned_tree.iter("tr"):
         parent = tr.getparent()
@@ -116,6 +120,7 @@ def _sanitize_fallback_tree(tree: Element, options: Options) -> tuple:
 def _justext_rescue(tree: Element, options: Options) -> tuple:
     "jusText as second fallback (external.py:166-173)."
     tree = basic_cleaning(tree)
+    check_deadline(options)
     temppost_algo = try_justext(tree, options.url, options.lang)
     temp_text = trim(" ".join(temppost_algo.itertext()))
     return temppost_algo, temp_text, len(temp_text)
@@ -167,7 +172,7 @@ def _compare_extraction(
         raw_tree = prune_unwanted_nodes(raw_tree, overall_discard_matches(raw_tree))
 
     check_deadline(options)  # stage boundary: before the readability pass
-    temppost_algo = try_readability(raw_tree)
+    temppost_algo = try_readability(raw_tree, options)
     algo_text = trim(temppost_algo.text_content())
     len_algo = len(algo_text)
 

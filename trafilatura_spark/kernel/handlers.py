@@ -16,7 +16,7 @@ from urllib.parse import urljoin
 from .cleaning import (
     delete_by_link_density,
     handle_textnode,
-    link_density_test_tables,
+    link_dense_tables,
     process_node,
     prune_unwanted_nodes,
 )
@@ -342,14 +342,44 @@ def _finalize_row(newtable: Element, newrow: Element, rowspan_map: dict, max_col
         newtable.append(newrow)
 
 
+def _inner_table_tails(table: Element, memo: dict) -> str:
+    """The tails of all tables inside ``table`` (not its own), concatenated
+    in document order: what a cell around ``table`` also receives, since
+    _fill_cell keeps the tail of every table nested in it at any depth.
+
+    Memoised per table in ``memo``, which one handler loop shares across
+    its handle_table calls: a nested table whose own handle_table still
+    runs has not been touched since an enclosing call measured it (any
+    handler that walks into it marks it done).  Each subtree is walked
+    once, iteratively: O(n) for the whole loop, at any nesting depth."""
+    if table in memo:
+        return memo[table]
+    nearest: dict = {table: []}  # table -> its nearest nested tables, in document order
+    stack = [(child, table) for child in reversed(table._children)]
+    while stack:
+        node, owner = stack.pop()
+        if node.tag == "table":
+            nearest[owner].append(node)
+            if node in memo:
+                continue
+            nearest[node] = []
+            owner = node
+        stack.extend((child, owner) for child in reversed(node._children))
+    for outer in reversed(list(nearest)):  # inner tables first
+        memo[outer] = "".join((t.tail or "") + memo[t] for t in nearest[outer])
+    return memo[table]
+
+
 def _fill_cell(
     new_child_elem: Element,
     cell: Element,
-    nested_elems: set,
+    table_tails: dict,
     ptags_with_div: set,
     options: Options,
 ) -> None:
-    "Extract a td/th cell's content into the new <cell> (:442-490)."
+    """Extract a td/th cell's content into the new <cell> (:442-490).
+    A nested table is left to its own handle_table; the cell keeps only
+    its tail and the tails of the tables inside it (_inner_table_tails)."""
     if len(cell) == 0:
         processed_cell = process_node(cell, options)
         if processed_cell is not None:
@@ -357,15 +387,24 @@ def _fill_cell(
         return
     new_child_elem.text, new_child_elem.tail = cell.text, cell.tail
     cell.tag = "done"
-    for child in list(cell.iterdescendants()):
+    # the cell's descendants in document order, nested tables unopened
+    items: list = []
+    stack = cell._children[::-1]
+    while stack:
+        node = stack.pop()
+        items.append(node)
+        if node.tag != "table":
+            stack.extend(node._children[::-1])
+    for child in items:
         if child.tag == "done":
             continue
-        if child in nested_elems:
-            if child.tag == "table" and child.tail:
+        if child.tag == "table":
+            tails = (child.tail or "") + _inner_table_tails(child, table_tails)
+            if tails:
                 if len(new_child_elem) > 0:
-                    new_child_elem[-1].tail = (new_child_elem[-1].tail or "") + child.tail
+                    new_child_elem[-1].tail = (new_child_elem[-1].tail or "") + tails
                 else:
-                    new_child_elem.text = (new_child_elem.text or "") + child.tail
+                    new_child_elem.text = (new_child_elem.text or "") + tails
             continue
         if child.tag in TABLE_ELEMS:
             child.tag = "cell"
@@ -389,16 +428,21 @@ def _fill_cell(
         child.tag = "done"
 
 
-def handle_table(table_elem: Element, potential_tags: set, options: Options) -> Optional[Element]:
-    "Process a single table (:493-580)."
+def handle_table(
+    table_elem: Element, potential_tags: set, options: Options, table_tails: Optional[dict] = None
+) -> Optional[Element]:
+    """Process a single table (:493-580).  ``table_tails`` is the handler
+    loop's _inner_table_tails memo; with it, every table of a nest costs
+    O(its own rows and cells), so the loop is O(n) however deep tables
+    nest."""
     newtable = Element("table")
     ptags_with_div = set(potential_tags) | {"div"}
+    if table_tails is None:
+        table_tails = {}
 
-    strip_tags(table_elem, "thead", "tbody", "tfoot")
-
-    nested_elems: set = set()
-    for nested_table in table_elem.iterdescendants("table"):
-        nested_elems.update(nested_table.iter())
+    # the reference strips thead/tbody/tfoot here; tree_cleaning has
+    # already stripped them from every tree that reaches the handlers
+    # (MANUALLY_STRIPPED) and nothing creates them again
 
     direct_rows = [c for c in table_elem if c.tag == "tr"]
     col_counts = [
@@ -451,7 +495,7 @@ def handle_table(table_elem: Element, potential_tags: set, options: Options) -> 
             if rows > 1:
                 for c in range(len(newrow), len(newrow) + colspan):
                     rowspan_map[c] = rows - 1
-            _fill_cell(new_child_elem, cell, nested_elems, ptags_with_div, options)
+            _fill_cell(new_child_elem, cell, table_tails, ptags_with_div, options)
             newrow.append(new_child_elem)
             for _ in range(colspan - 1):
                 newrow.append(define_cell_type(is_header))
@@ -504,8 +548,10 @@ def handle_image(element: Optional[Element], options: Optional[Options] = None) 
     return processed_element
 
 
-def handle_textelem(element: Element, potential_tags: set, options: Options) -> Optional[Element]:
-    "Dispatch by tag (:625-652)."
+def handle_textelem(
+    element: Element, potential_tags: set, options: Options, table_tails: Optional[dict] = None
+) -> Optional[Element]:
+    "Dispatch by tag (:625-652); ``table_tails`` is handle_table's per-loop memo."
     new_element = None
     if element.tag == "list":
         new_element = handle_lists(element, options)
@@ -524,7 +570,7 @@ def handle_textelem(element: Element, potential_tags: set, options: Options) -> 
     elif element.tag in FORMATTING:
         new_element = handle_formatting(element, options)
     elif element.tag == "table" and "table" in potential_tags:
-        new_element = handle_table(element, potential_tags, options)
+        new_element = handle_table(element, potential_tags, options, table_tails)
     elif element.tag == "graphic" and "graphic" in potential_tags:
         new_element = handle_image(element, options)
     else:
@@ -539,7 +585,9 @@ def prune_unwanted_sections(
 ) -> Element:
     "Rule-based deletion of targeted sections (:704-740)."
     favor_precision = options.focus == "precision"
+    check_deadline(options)
     tree = prune_unwanted_nodes(tree, overall_discard_matches(tree), with_backup=True)
+    check_deadline(options)
     if "graphic" not in potential_tags:
         tree = prune_unwanted_nodes(tree, discard_image_matches(tree))
     if options.focus != "recall":
@@ -548,12 +596,13 @@ def prune_unwanted_sections(
         if favor_precision:
             tree = prune_unwanted_nodes(tree, precision_discard_matches(tree))
     for _ in range(2):
+        check_deadline(options)
         tree = delete_by_link_density(tree, "div", backtracking=True, favor_precision=favor_precision)
         tree = delete_by_link_density(tree, "list", backtracking=False, favor_precision=favor_precision)
         tree = delete_by_link_density(tree, "p", backtracking=False, favor_precision=favor_precision)
+    check_deadline(options)
     if "table" in potential_tags or favor_precision:
-        boilerplate_tables = [el for el in tree.iter("table") if link_density_test_tables(el)]
-        for elem in boilerplate_tables:
+        for elem in link_dense_tables(tree):
             delete_element(elem, keep_tail=False)
     if favor_precision:
         while len(tree) > 0 and tree[-1].tag == "head":
@@ -575,10 +624,11 @@ def _handle_all(subelems, potential_tags: set, options: Options) -> list:
     deadline check every 64 elements (the per-document timeout must be
     able to preempt huge candidate subtrees, not only stage boundaries)."""
     out = []
+    table_tails: dict = {}
     for i, e in enumerate(subelems):
         if i % 64 == 0:
             check_deadline(options)
-        el = handle_textelem(e, potential_tags, options)
+        el = handle_textelem(e, potential_tags, options, table_tails)
         if el is not None:
             out.append(el)
     return out
@@ -604,6 +654,7 @@ def _extract(tree: Element, options: Options) -> tuple:
         rung, subtree = first_match_ladder(tree, BODY_PREDS, rung)
         if subtree is None:
             break
+        check_deadline(options)
         subtree = prune_unwanted_sections(subtree, potential_tags, options)
         if len(subtree) == 0:
             rung += 1
@@ -656,10 +707,11 @@ def recover_wild_text(
     elem_texts = [_elem_text(el) for el in result_body]
     existing = "\n".join(filter(None, elem_texts))
     existing_elems = set(elem_texts)
+    table_tails: dict = {}
     for i, subelem in enumerate(subelems):
         if i % 64 == 0:
             check_deadline(options)
-        processed = handle_textelem(subelem, potential_tags, options)
+        processed = handle_textelem(subelem, potential_tags, options, table_tails)
         if processed is None:
             continue
         text = _elem_text(processed)
@@ -679,6 +731,7 @@ def recover_wild_text(
 def extract_content(cleaned_tree: Element, options: Options) -> tuple:
     "Main content extraction with recovery + repeat-drop (:793-820)."
     backup_tree = cleaned_tree.copy_tree()
+    check_deadline(options)
 
     result_body, temp_text, potential_tags = _extract(cleaned_tree, options)
 

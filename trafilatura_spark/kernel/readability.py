@@ -16,6 +16,8 @@ from functools import lru_cache
 from typing import Optional
 
 from .dom import Element, delete_element
+from .settings import DEFAULT_OPTIONS, ExtractionTimeout, Options, check_deadline
+from .subtree import fold_subtree
 from .textutils import trim
 
 DOT_SPACE = re.compile(r"\.( |$)")
@@ -24,7 +26,10 @@ DIV_SCORES = {"div", "article"}
 BLOCK_SCORES = {"pre", "td", "blockquote"}
 BAD_ELEM_SCORES = {"address", "ol", "ul", "dl", "dd", "dt", "li", "form", "aside"}
 STRUCTURE_SCORES = {"h1", "h2", "h3", "h4", "h5", "h6", "th", "header", "footer", "nav"}
-TEXT_CLEAN_ELEMS = ("p", "img", "li", "a", "embed", "input")
+# _sanitize's targets and the descendants it counts
+_SANITIZE_TARGETS = frozenset(("table", "ul", "div", "aside", "header", "footer", "section"))
+_SANITIZE_COUNTED = frozenset(("p", "img", "li", "embed", "input"))
+_SCORED_TAGS = frozenset(("p", "pre", "td"))
 DIV_TO_P_ELEMS = {"a", "blockquote", "dl", "div", "img", "ol", "p", "pre", "table", "ul"}
 FRAME_TAGS = {"body", "html"}
 LIST_TAGS = {"ol", "ul"}
@@ -87,49 +92,6 @@ def _text_and_links(elem: Element) -> tuple:
     return "".join(parts), links
 
 
-def _clean_stats(elem: Element) -> tuple:
-    """One subtree walk for the _sanitize counting heuristics:
-    (inner text, {kind: count for TEXT_CLEAN_ELEMS}, hidden-input count,
-    descendant <a> list) — replaces len(TEXT_CLEAN_ELEMS)+3 separate
-    subtree scans per candidate."""
-    parts: list = []
-    links: list = []
-    counts = dict.fromkeys(TEXT_CLEAN_ELEMS, 0)
-    hidden_inputs = 0
-    emit = parts.append
-    stack: list = []
-    children = elem._children
-    for i in range(len(children) - 1, -1, -1):
-        c = children[i]
-        if c.tail:
-            stack.append(c.tail)
-        stack.append(c)
-    if elem.text:
-        stack.append(elem.text)
-    pop = stack.pop
-    while stack:
-        item = pop()
-        if item.__class__ is str:
-            emit(item)
-            continue
-        tag = item.tag
-        if tag in counts:
-            counts[tag] += 1
-            if tag == "a":
-                links.append(item)
-            elif tag == "input" and item.get("type") == "hidden":
-                hidden_inputs += 1
-        children = item._children
-        for i in range(len(children) - 1, -1, -1):
-            c = children[i]
-            if c.tail:
-                stack.append(c.tail)
-            stack.append(c)
-        if item.text:
-            stack.append(item.text)
-    return "".join(parts), counts, hidden_inputs, links
-
-
 @lru_cache(maxsize=16384)
 def _unlikely_attrs(attrs: str) -> bool:
     "Memoized UNLIKELY/MAYBE verdict — class/id strings repeat across a page."
@@ -156,12 +118,18 @@ class _Candidate:
 
 
 class ReadabilityExtractor:
-    "One-shot extractor over a (mutable) tree; returns a <div> body Element."
+    """One-shot extractor over a (mutable) tree; returns a <div> body
+    Element.  Checks the per-document deadline of ``options`` between its
+    passes."""
 
-    def __init__(self, doc: Element, min_text_length: int = 25, retry_length: int = 250):
+    def __init__(
+        self, doc: Element, min_text_length: int = 25, retry_length: int = 250,
+        options: Options = DEFAULT_OPTIONS,
+    ):
         self.doc = doc
         self.min_text_length = min_text_length
         self.retry_length = retry_length
+        self.options = options
 
     def summary(self) -> Element:
         for elem in list(self.doc.iter("script", "style", "fencedframe")):
@@ -169,10 +137,13 @@ class ReadabilityExtractor:
 
         ruthless = True
         while True:
+            check_deadline(self.options)
             if ruthless:
                 self._remove_unlikely_candidates()
             self._transform_misused_divs()
+            check_deadline(self.options)
             candidates = self._score_paragraphs()
+            check_deadline(self.options)
 
             best = self._select_best_candidate(candidates)
             if best:
@@ -185,6 +156,7 @@ class ReadabilityExtractor:
                 article = body if body is not None else self.doc
 
             cleaned = self._sanitize(article, candidates)
+            check_deadline(self.options)
             article_length = _text_length(cleaned)
             if ruthless and article_length < self.retry_length:
                 ruthless = False
@@ -228,15 +200,35 @@ class ReadabilityExtractor:
         return link_length / total
 
     def _score_paragraphs(self) -> dict:
+        """Score p/pre/td by text length and commas, credit their parent
+        and grandparent, then scale every candidate by its link density.
+        Text and link figures of all of them come from one fold_subtree
+        walk (no mutation happens here): O(n) however deep the page."""
+        scored = list(self.doc.iter("p", "pre", "td"))
+        near: dict = {}  # parents and grandparents: the possible candidates
+        for elem in scored:
+            parent_node = elem.getparent()
+            if parent_node is not None:
+                near[parent_node] = None
+                if parent_node.getparent() is not None:
+                    near[parent_node.getparent()] = None
+        stats: dict = {}
+
+        def visit(elem: Element, elem_stats) -> bool:
+            stats[elem] = elem_stats
+            return False
+
+        fold_subtree(self.doc, _SCORED_TAGS, visit, key_elems=near, link_tag="a")
+
         candidates: dict = {}
-        for elem in list(self.doc.iter("p", "pre", "td")):
+        for elem in scored:
             parent_node = elem.getparent()
             if parent_node is None:
                 continue
             grand_parent_node = parent_node.getparent()
 
-            elem_text = trim(elem.text_content())
-            elem_text_len = len(elem_text)
+            elem_stats = stats[elem]
+            elem_text_len = elem_stats.length
             if elem_text_len < self.min_text_length:
                 continue
 
@@ -244,13 +236,15 @@ class ReadabilityExtractor:
                 if node is not None and node not in candidates:
                     candidates[node] = self._score_node(node)
 
-            score = 1 + len(elem_text.split(",")) + min(elem_text_len / 100, 3)
+            # len(trim(text).split(",")) is the comma count + 1
+            score = 1 + (elem_stats.commas + 1) + min(elem_text_len / 100, 3)
             candidates[parent_node].score += score
             if grand_parent_node is not None:
                 candidates[grand_parent_node].score += score / 2
 
         for elem, candidate in candidates.items():
-            candidate.score *= 1 - self._link_density(elem)
+            elem_stats = stats[elem]
+            candidate.score *= 1 - elem_stats.link_chars / (elem_stats.length or 1)
         return candidates
 
     def _class_weight(self, elem: Element) -> float:
@@ -349,79 +343,71 @@ class ReadabilityExtractor:
             else:
                 delete_element(elem)
 
-        allowed: set = set()
-        targets = [
-            el for el in node.iter() if el.tag in ("table", "ul", "div", "aside", "header", "footer", "section")
-        ]
-        for elem in reversed(targets):
-            if elem in allowed or elem.getparent() is None and elem is not node:
-                continue
+        # Targets are judged children first (reverse document order), each
+        # on its subtree as left by the deletions below it, so one
+        # fold_subtree walk gives every target's figures: O(n) in the
+        # article size instead of one subtree walk per target.
+        def visit(elem: Element, stats) -> bool:
             weight = self._class_weight(elem)
             score = candidates[elem].score if elem in candidates else 0
             if weight + score < 0:
                 delete_element(elem)
-                continue
-            text, counts, hidden_inputs, links = _clean_stats(elem)
-            if text.count(",") < 10:
-                to_remove = True
-                reason = ""
-                counts["li"] -= 100
-                counts["input"] -= hidden_inputs
+                return True
+            if stats.commas >= 10:
+                return False
+            counts = stats.counts
+            n_p = counts.get("p", 0)
+            n_img = counts.get("img", 0)
+            n_li = counts.get("li", 0) - 100
+            n_input = counts.get("input", 0) - counts.get("input:hidden", 0)
+            n_embed = counts.get("embed", 0)
+            content_length = stats.length
+            link_density = stats.link_chars / (content_length or 1)
+            too_short = content_length < self.min_text_length
+            if (
+                (n_p and n_img > 1 + n_p * 1.3)  # too many images
+                or (n_li > n_p and elem.tag not in LIST_TAGS)  # more li than p
+                or n_input > n_p / 3  # too many inputs
+                or (too_short and (n_img == 0 or n_img > 2))  # too short
+                or (weight < 25 and link_density > 0.2)  # link-dense for weight
+                or (weight >= 25 and link_density > 0.5)  # link-dense for high weight
+                or (n_embed == 1 and content_length < 75) or n_embed > 1  # embeds
+            ):
+                delete_element(elem)
+                return True
+            if content_length:
+                return False
+            # no content: kept when the neighbours carry > 1000 chars
+            siblings = []
+            for sib in elem.itersiblings():
+                sib_len = _text_length(sib)
+                if sib_len:
+                    siblings.append(sib_len)
+                    break
+            limit = len(siblings) + 1
+            for sib in elem.itersiblings(preceding=True):
+                sib_len = _text_length(sib)
+                if sib_len:
+                    siblings.append(sib_len)
+                    if len(siblings) >= limit:
+                        break
+            if siblings and sum(siblings) > 1000:
+                return False
+            delete_element(elem)
+            return True
 
-                content_length = len(trim(text))
-                total = content_length or 1
-                link_density = sum(_text_length(link) for link in links) / total
-                parent_node = elem.getparent()
-                if parent_node is not None:
-                    score = candidates[parent_node].score if parent_node in candidates else 0
-                if counts["p"] and counts["img"] > 1 + counts["p"] * 1.3:
-                    reason = "too many images"
-                elif counts["li"] > counts["p"] and elem.tag not in LIST_TAGS:
-                    reason = "more li than p"
-                elif counts["input"] > (counts["p"] / 3):
-                    reason = "too many inputs"
-                elif content_length < self.min_text_length and counts["img"] == 0:
-                    reason = "too short, no image"
-                elif content_length < self.min_text_length and counts["img"] > 2:
-                    reason = "too short, many images"
-                elif weight < 25 and link_density > 0.2:
-                    reason = "link-dense for weight"
-                elif weight >= 25 and link_density > 0.5:
-                    reason = "link-dense for high weight"
-                elif (counts["embed"] == 1 and content_length < 75) or counts["embed"] > 1:
-                    reason = "embeds"
-                elif not content_length:
-                    reason = "no content"
-                    siblings = []
-                    for sib in elem.itersiblings():
-                        sib_len = _text_length(sib)
-                        if sib_len:
-                            siblings.append(sib_len)
-                            break
-                    limit = len(siblings) + 1
-                    for sib in elem.itersiblings(preceding=True):
-                        sib_len = _text_length(sib)
-                        if sib_len:
-                            siblings.append(sib_len)
-                            if len(siblings) >= limit:
-                                break
-                    if siblings and sum(siblings) > 1000:
-                        to_remove = False
-                        allowed.update(elem.iter("table", "ul", "div", "section"))
-                else:
-                    to_remove = False
-
-                if to_remove:
-                    delete_element(elem)
+        fold_subtree(node, _SANITIZE_TARGETS, visit, counted=_SANITIZE_COUNTED, link_tag="a")
 
         self.doc = node
         return node
 
 
-def try_readability(htmlinput: Element) -> Element:
-    "Safety-net wrapper (reference external.py:35-45)."
+def try_readability(htmlinput: Element, options: Options = DEFAULT_OPTIONS) -> Element:
+    "Safety-net wrapper (reference external.py:35-45); a deadline miss still aborts."
     try:
-        return ReadabilityExtractor(htmlinput, min_text_length=25, retry_length=250).summary()
+        return ReadabilityExtractor(htmlinput, min_text_length=25, retry_length=250, options=options).summary()
+    except ExtractionTimeout:
+        raise
     except Exception:
         return Element("div")
 

@@ -72,37 +72,44 @@ def _convert_math(text: str) -> str:
     return _MATH_INLINE_RE.sub(lambda m: f"${m.group(1)}$", text)
 
 
-def _collapse_emphasis(element: Element, active: frozenset = frozenset()) -> None:
-    if element.tag == "hi":
-        here = HI_FORMATTING.get(element.get("rend") or "")
-        if here:
-            active = active | {here}
-        while (
-            not (element.text or "").strip()
-            and len(element) == 1
-            and element[0].tag == "hi"
-            and not (element[0].tail or "").strip()
-            and HI_FORMATTING.get(element[0].get("rend") or "") in active
-        ):
-            child = element[0]
-            element.text = (element.text or "") + (child.text or "")
-            element.extend(list(child))
-            element.remove(child)
-    for child in element:
-        _collapse_emphasis(child, active)
+def _collapse_emphasis(element: Element) -> None:
+    "Merge nested same-marker emphasis (preorder; iterative, any depth)."
+    stack: list = [(element, frozenset())]
+    while stack:
+        element, active = stack.pop()
+        if element.tag == "hi":
+            here = HI_FORMATTING.get(element.get("rend") or "")
+            if here:
+                active = active | {here}
+            while (
+                not (element.text or "").strip()
+                and len(element) == 1
+                and element[0].tag == "hi"
+                and not (element[0].tail or "").strip()
+                and HI_FORMATTING.get(element[0].get("rend") or "") in active
+            ):
+                child = element[0]
+                element.text = (element.text or "") + (child.text or "")
+                element.extend(list(child))
+                element.remove(child)
+        stack.extend((child, active) for child in reversed(element._children))
 
 
 def _convert_math_tree(element: Element) -> None:
-    if element.tag == "code" or (
-        element.tag == "hi" and HI_FORMATTING.get(element.get("rend") or "") == "`"
-    ):
-        return
-    if element.text:
-        element.text = _convert_math(element.text)
-    for child in element:
-        _convert_math_tree(child)
-        if child.tail:
-            child.tail = _convert_math(child.tail)
+    "TeX delimiters to markdown math outside code (iterative, any depth)."
+    stack: list = [element]
+    while stack:
+        element = stack.pop()
+        if element.tag == "code" or (
+            element.tag == "hi" and HI_FORMATTING.get(element.get("rend") or "") == "`"
+        ):
+            continue
+        if element.text:
+            element.text = _convert_math(element.text)
+        for child in element:
+            if child.tail:
+                child.tail = _convert_math(child.tail)
+        stack.extend(reversed(element._children))
 
 
 def _last_char(returnlist: list) -> str:
@@ -229,74 +236,90 @@ def replace_element_text(
 def process_element(
     element: Element, returnlist: list, include_formatting: bool, in_cell: bool = False, in_item: bool = False
 ) -> None:
-    "Recursive flattening (reference xml.py:521-606)."
-    in_cell = in_cell or element.tag == "cell"
-    in_item = in_item or element.tag == "item"
-    if element.tag == "cell" and element.getprevious() is None:
-        returnlist.append("| ")
+    """Flatten ``element`` into ``returnlist`` (reference xml.py:521-606).
 
-    if element.tag in NEWLINE_ELEMS and not in_cell and not in_item and _last_char(returnlist) not in SEPARATORS:
-        returnlist.append("\n")
+    The reference recurses once per nesting level, which fails past the
+    recursion limit (~1000 levels).  This walks an explicit stack instead:
+    each element is opened (its own text), its children are flattened, then
+    it is closed (separators and its tail), in the reference's order.  O(n)
+    stack operations, and any depth fits in memory."""
+    stack: list = [(element, in_cell, in_item, None)]
+    pop = stack.pop
+    push = stack.append
+    while stack:
+        element, in_cell, in_item, renders_inline = pop()
+        tag = element.tag
+        if renders_inline is None:  # open: the part before the children
+            in_cell = in_cell or tag == "cell"
+            in_item = in_item or tag == "item"
+            if tag == "cell" and (element.getparent() is None or element.getparent()[0] is element):
+                returnlist.append("| ")  # first cell of its row
 
-    _consumes_children = _consumes_inline_children(element)
-    _renders_inline = bool(element.text) or _consumes_children
-
-    if _renders_inline:
-        returnlist.append(replace_element_text(element, include_formatting, in_item, in_cell))
-    elif include_formatting and element.tag == "head" and not in_cell and len(element):
-        returnlist.append(f"{_heading_prefix(element)} ")
-
-    if element.tail and element.tag != "graphic" and in_cell:
-        tail = element.tail.strip()
-        if tail and _last_char(returnlist) not in (" ", "|", ""):
-            tail = f" {tail}"
-        returnlist.append(_escape_cell(tail))
-
-    if element.tag == "list" and in_item and _last_char(returnlist) not in ("\n", ""):
-        returnlist.append("\n")
-
-    if not _consumes_children:
-        for child in element:
-            process_element(child, returnlist, include_formatting, in_cell, in_item)
-
-    if not _renders_inline:
-        if element.tag == "graphic":
-            image = f"{_list_marker(element, in_item, include_formatting)}{_image_markup(element)}"
-            if in_cell:
-                image = _escape_cell(image)
-            returnlist.append(image)
-
-            if element.tail:
-                tail_text = f" {element.tail.strip()}"
-                returnlist.append(_escape_cell(tail_text) if in_cell else tail_text)
-        elif element.tag in NEWLINE_ELEMS:
-            if element.tag == "row":
-                cells = element.findall("cell")
-                if any(cell.get("role") == "head" for cell in cells):
-                    returnlist.append(f"\n|{'---|' * len(cells)}\n")
-            elif not in_cell:
+            if tag in NEWLINE_ELEMS and not in_cell and not in_item and _last_char(returnlist) not in SEPARATORS:
                 returnlist.append("\n")
-        elif element.tag not in ("cell", "item"):
-            return
 
-    last_in_item = in_item and is_last_element_in_item(element)
-    if element.tag in NEWLINE_ELEMS and not in_cell and not in_item:
-        returnlist.append("\n␤\n" if include_formatting and element.tag != "row" else "\n")
-    elif element.tag == "cell":
-        returnlist.append(" | ")
-    elif element.tag in ("head", "item") and in_cell and not is_last_element_in_cell(element):
-        returnlist.append(" ")
-    elif element.tag not in SPECIAL_FORMATTING and not last_in_item and not is_last_element_in_cell(element):
-        returnlist.append(" ")
+            consumes_children = _consumes_inline_children(element)
+            renders_inline = bool(element.text) or consumes_children
 
-    if element.tail and not in_cell and element.tag != "graphic":
-        tail = element.tail.strip() if in_item or element.tag == "list" else element.tail
-        if tail and in_item and _last_char(returnlist) not in SEPARATORS:
-            tail = f" {tail}"
-        returnlist.append(tail)
+            if renders_inline:
+                returnlist.append(replace_element_text(element, include_formatting, in_item, in_cell))
+            elif include_formatting and tag == "head" and not in_cell and len(element):
+                returnlist.append(f"{_heading_prefix(element)} ")
 
-    if last_in_item and not in_cell:
-        returnlist.append("\n")
+            if element.tail and tag != "graphic" and in_cell:
+                tail = element.tail.strip()
+                if tail and _last_char(returnlist) not in (" ", "|", ""):
+                    tail = f" {tail}"
+                returnlist.append(_escape_cell(tail))
+
+            if tag == "list" and in_item and _last_char(returnlist) not in ("\n", ""):
+                returnlist.append("\n")
+
+            push((element, in_cell, in_item, renders_inline))
+            if not consumes_children:
+                for child in reversed(element._children):
+                    push((child, in_cell, in_item, None))
+            continue
+
+        # close: the part after the children
+        if not renders_inline:
+            if tag == "graphic":
+                image = f"{_list_marker(element, in_item, include_formatting)}{_image_markup(element)}"
+                if in_cell:
+                    image = _escape_cell(image)
+                returnlist.append(image)
+
+                if element.tail:
+                    tail_text = f" {element.tail.strip()}"
+                    returnlist.append(_escape_cell(tail_text) if in_cell else tail_text)
+            elif tag in NEWLINE_ELEMS:
+                if tag == "row":
+                    cells = element.findall("cell")
+                    if any(cell.get("role") == "head" for cell in cells):
+                        returnlist.append(f"\n|{'---|' * len(cells)}\n")
+                elif not in_cell:
+                    returnlist.append("\n")
+            elif tag not in ("cell", "item"):
+                continue
+
+        last_in_item = in_item and is_last_element_in_item(element)
+        if tag in NEWLINE_ELEMS and not in_cell and not in_item:
+            returnlist.append("\n␤\n" if include_formatting and tag != "row" else "\n")
+        elif tag == "cell":
+            returnlist.append(" | ")
+        elif tag in ("head", "item") and in_cell and not is_last_element_in_cell(element):
+            returnlist.append(" ")
+        elif tag not in SPECIAL_FORMATTING and not last_in_item and not is_last_element_in_cell(element):
+            returnlist.append(" ")
+
+        if element.tail and not in_cell and tag != "graphic":
+            tail = element.tail.strip() if in_item or tag == "list" else element.tail
+            if tail and in_item and _last_char(returnlist) not in SEPARATORS:
+                tail = f" {tail}"
+            returnlist.append(tail)
+
+        if last_in_item and not in_cell:
+            returnlist.append("\n")
 
 
 def xmltotxt(xmloutput: Optional[Element], include_formatting: bool) -> str:

@@ -1524,8 +1524,10 @@ ORACLE_SQL = {
     "extract_turn_metadata": """
     SELECT * FROM read_parquet('/root/repo/tests/fixtures/turn_metadata_expected.parquet')
     """,
+    # SUM over an INTEGER column is HUGEINT in DuckDB but bigint in Spark:
+    # cast so both engines hash the same type
     "extract_tier_metrics": """
-    SELECT tier, COUNT(*) AS n_turns, SUM(chars_kept) AS total_chars
+    SELECT tier, COUNT(*) AS n_turns, CAST(SUM(chars_kept) AS BIGINT) AS total_chars
     FROM read_parquet('/root/repo/tests/fixtures/cascade_turns_expected.parquet')
     GROUP BY tier ORDER BY tier
     """,
