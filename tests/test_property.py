@@ -242,8 +242,12 @@ def _converted_tree(fragment):
     return convert_tags(tree, DEFAULT_OPTIONS)  # produces <ref>/<graphic> vocabulary
 
 
+def _targeted(elem):
+    "The refine key the fold tests give a <ref>."
+    return "ref:targeted" if elem.get("target") else None
+
+
 def _assert_stats_match_scans(elem, stats):
-    from trafilatura_spark.kernel.cleaning import collect_link_info
     from trafilatura_spark.kernel.textutils import trim
 
     text = elem.text_content()
@@ -251,9 +255,12 @@ def _assert_stats_match_scans(elem, stats):
     assert stats.length == len(trim(text))
     assert stats.commas == text.count(",")
     assert stats.counts.get("ref", 0) == len(refs)
+    assert stats.counts.get("ref:targeted", 0) == sum(1 for ref in refs if ref.get("target"))
     assert ("graphic" in stats.counts) == (elem.find(".//graphic") is not None)
-    linklen, filled, short, _ = collect_link_info(refs)
-    assert (stats.link_chars, stats.links_filled, stats.links_short) == (linklen, filled, short)
+    # the reference's collect_link_info figures (htmlprocessing.py:115-123)
+    lengths = [n for n in (len(trim(ref.text_content())) for ref in refs) if n]
+    figures = (sum(lengths), len(lengths), sum(1 for n in lengths if n < 10))
+    assert (stats.link_chars, stats.links_filled, stats.links_short) == figures
 
 
 @given(html_fragment())
@@ -274,8 +281,40 @@ def test_fold_subtree_equivalence(fragment):
         seen.append(elem)
         return False
 
-    fold_subtree(tree, (), visit, key_elems=set(tree.iter()), counted={"ref", "graphic"}, link_tag="ref")
+    fold_subtree(
+        [tree], (), visit, key_elems=set(tree.iter()), counted={"ref", "graphic"},
+        refine={"ref": _targeted}, link_tag="ref",
+    )
     assert seen == list(tree.iter())[::-1]  # reverse document order
+
+
+@given(html_fragment(), st.integers(0, 2**16))
+@settings(max_examples=150, deadline=None)
+def test_outermost_and_folds_from_many_roots(fragment, seed):
+    """``outermost`` keeps exactly the elements with no ancestor among the
+    given ones, in the given order, and a fold from those roots visits the
+    given keys in reverse document order with the same stats as scans."""
+    from trafilatura_spark.kernel.subtree import fold_subtree, outermost
+
+    tree = _converted_tree(fragment)
+    if tree is None:
+        return
+    elems = [el for i, el in enumerate(tree.iter()) if (i * 7 + seed) % 3 == 0]
+    chosen = set(elems)
+    roots = outermost(elems)
+    assert roots == [el for el in elems if not any(anc in chosen for anc in el.iterancestors())]
+    seen = []
+
+    def visit(elem, stats):
+        _assert_stats_match_scans(elem, stats)
+        seen.append(elem)
+        return False
+
+    fold_subtree(
+        roots, (), visit, key_elems=chosen, counted={"ref", "graphic"}, refine={"ref": _targeted},
+        link_tag="ref",
+    )
+    assert seen == elems[::-1]
 
 
 @given(html_fragment(), st.integers(0, 2**16))
@@ -297,7 +336,10 @@ def test_fold_subtree_deletions_match_rescans(fragment, seed):
             return True
         return False
 
-    fold_subtree(tree, ("div", "p", "list", "item", "table", "hi"), visit, counted={"ref", "graphic"}, link_tag="ref")
+    fold_subtree(
+        [tree], ("div", "p", "list", "item", "table", "hi"), visit, counted={"ref", "graphic"},
+        refine={"ref": _targeted}, link_tag="ref",
+    )
 
 
 def _splice_one_by_one(tree, matches):

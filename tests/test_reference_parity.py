@@ -153,10 +153,11 @@ def test_link_density_threshold_parity():
     """unit_tests.py:1433-1504: table link-density thresholds (80% medium /
     50% large, textless icon links exempt) and the div-level farm rules
     (short punctuated lists kept, big link farms pruned, long card links
-    kept)."""
-    from trafilatura_spark.kernel.cleaning import link_density_test, link_density_test_tables
+    kept).  Checked through the production entry points: whether
+    link_dense_tables picks the table, and whether delete_by_link_density
+    deletes the div."""
+    from trafilatura_spark.kernel.cleaning import delete_by_link_density, link_dense_tables
     from trafilatura_spark.kernel.loader import load_html
-    from trafilatura_spark.kernel.textutils import trim
 
     MED = '<ref target="/x">' + "x" * 250 + "</ref>"
     BIG = '<ref target="/x">' + "x" * 600 + "</ref>"
@@ -168,17 +169,22 @@ def test_link_density_threshold_parity():
         (f"<table><cell>{'y' * 400}{BIG}</cell></table>", True),   # 60%, large -> removed
         (f"<table><cell>{'y' * 600}{BIG}</cell></table>", False),  # 40%, large -> kept
     ]
-    for fragment, expected in table_cases:
+    def table_case(fragment):
         tree = load_html(_wrap(fragment))
-        assert link_density_test_tables(tree.find(".//table")) is expected, fragment[:60]
+        return tree.find(".//table") in link_dense_tables(tree)
+
+    for fragment, expected in table_cases:
+        assert table_case(fragment) is expected, fragment[:60]
 
     icon = f"<table><cell>{'data ' * 50}<ref target=\"/x\"><graphic src=\"/i.png\"/></ref></cell></table>"
-    assert link_density_test_tables(load_html(_wrap(icon)).find(".//table")) is False
+    assert table_case(icon) is False
 
     def div_case(items):
+        "Whether delete_by_link_density removes the div."
         tree = load_html(_wrap(f"<div>{items}</div><p>real article sibling here</p>"))
         el = tree.find(".//div")
-        return link_density_test(el, trim(el.text_content()))[0]
+        delete_by_link_density(tree, "div")
+        return el.getparent() is None
 
     short = "".join(f'<ref target="/p{i}">Recommended product number {i}: a nice gadget</ref> ' for i in range(3))
     assert div_case(short) is False  # 100-150 chars with punctuation: kept

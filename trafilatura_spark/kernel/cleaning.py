@@ -21,7 +21,7 @@ from .settings import (
     Options,
     check_deadline,
 )
-from .subtree import fold_subtree
+from .subtree import fold_subtree, outermost
 from .textutils import LINK_FARM_RATIO, is_image_element, textfilter, trim
 
 REND_TAG_MAPPING = {
@@ -128,14 +128,6 @@ def prune_unwanted_nodes(
     return tree
 
 
-def collect_link_info(links: list[Element]) -> tuple[int, int, int, list[str]]:
-    "Heuristics on link text (htmlprocessing.py:115-123)."
-    mylist = [e for e in (trim(elem.text_content()) for elem in links) if e]
-    lengths = list(map(len, mylist))
-    shortelems = sum(1 for length in lengths if length < 10)
-    return sum(lengths), len(mylist), shortelems, mylist
-
-
 def _is_last_child(element: Element) -> bool:
     "``element.getnext() is None`` without the sibling index scan."
     parent = element.getparent()
@@ -146,11 +138,15 @@ def _link_density_verdict(
     element: Element, elemlen: int, nlinks: int, linklen: int, elemnum: int, shortelems: int,
     favor_precision: bool,
 ) -> tuple[bool, bool]:
-    """The decision of link_density_test (htmlprocessing.py:126-172) over
-    link aggregates: ``elemlen`` is the trimmed text length, ``nlinks`` the
-    number of descendant <ref>s, and ``linklen``/``elemnum``/``shortelems``
-    the collect_link_info figures.  Returns (boilerplate?, whether the
-    reference's link-text list comes back non-empty)."""
+    """The decision of the reference's link_density_test
+    (htmlprocessing.py:126-172) over link aggregates: ``elemlen`` is the
+    trimmed text length, ``nlinks`` the number of descendant <ref>s, and
+    ``linklen``/``elemnum``/``shortelems`` the reference's
+    collect_link_info figures (htmlprocessing.py:115-123): the summed
+    trimmed text length of the <ref>s, how many have non-empty trimmed
+    text, and how many of those are shorter than 10.  Returns
+    (boilerplate?, whether the reference's link-text list comes back
+    non-empty)."""
     if nlinks == 1:
         # the one link's trimmed text is the whole of linklen
         len_threshold = 10 if favor_precision else 100
@@ -173,32 +169,15 @@ def _link_density_verdict(
     return False, False
 
 
-def link_density_test(
-    element: Element, text: str, favor_precision: bool = False
-) -> tuple[bool, list[str]]:
-    """Boilerplate predicate for link-rich sections (htmlprocessing.py:126-172),
-    ``text`` being the element's trimmed text.  Scans the element's own
-    subtree; delete_by_link_density takes the same decision from one fold."""
-    links = element.findall(".//ref")
-    if not links or element.find(".//graphic") is not None:
-        return False, []
-    linklen, elemnum, shortelems, mylist = collect_link_info(links)
-    result, listed = _link_density_verdict(
-        element, len(text), len(links), linklen, elemnum, shortelems, favor_precision
-    )
-    return result, mylist if listed else []
-
-
 _LINK_COUNTED = frozenset(("ref", "graphic"))
 
 
 def link_dense_tables(tree: Element) -> list[Element]:
     """The tables of ``tree`` (itself included), in document order, that
     are link-dense boilerplate (htmlprocessing.py:175-189).  One
-    fold_subtree walk: O(n) however deeply the tables nest."""
+    fold_subtree walk over the outermost tables' subtrees: O(n) however
+    deeply the tables nest."""
     found: list = []
-    if next(tree.iter("table"), None) is None:
-        return found
 
     def visit(elem: Element, stats) -> bool:
         if stats.counts.get("ref"):
@@ -209,14 +188,9 @@ def link_dense_tables(tree: Element) -> list[Element]:
                     found.append(elem)
         return False
 
-    fold_subtree(tree, ("table",), visit, counted=_LINK_COUNTED, link_tag="ref")
+    fold_subtree(outermost(tree.iter("table")), ("table",), visit, counted=_LINK_COUNTED, link_tag="ref")
     found.reverse()
     return found
-
-
-def link_density_test_tables(element: Element) -> bool:
-    "Boilerplate predicate for link-rich tables (htmlprocessing.py:175-189)."
-    return element in link_dense_tables(element)
 
 
 def delete_by_link_density(
@@ -225,20 +199,22 @@ def delete_by_link_density(
     """Delete elements identified as link-dense boilerplate
     (htmlprocessing.py:192-221).  Every ``tagname`` element is judged on
     the tree as it was before any deletion; only those with a <ref>
-    descendant can be deleted, and one fold_subtree walk gives all of
-    their figures: O(n) in the subtree size."""
+    descendant can be deleted, and one fold_subtree walk over the
+    outermost of them gives all of their figures: O(n) in the subtree
+    size."""
     # the candidates: ancestors of a <ref> with the tag, each chain climbed
-    # once (a node with no <ref> descendant is never deleted:
-    # link_density_test returns (False, []) and backtracking requires a
-    # non-empty link-text list)
+    # once (a node with no <ref> descendant is never deleted: the
+    # reference's link_density_test returns (False, []) and backtracking
+    # requires a non-empty link-text list).  Refs are taken in document
+    # order, so the outermost candidates come out in document order.
     climbed: set = set()
-    candidates: set = set()
+    candidates: dict = {}
     for ref in subtree.iterdescendants("ref"):
         node = ref.getparent()
         while node is not None and node not in climbed:
             climbed.add(node)
             if node.tag == tagname:
-                candidates.add(node)
+                candidates[node] = None
             if node is subtree:
                 break
             node = node.getparent()
@@ -266,7 +242,9 @@ def delete_by_link_density(
                 deletions.append(elem)
         return False
 
-    fold_subtree(subtree, (), visit, key_elems=candidates, counted=_LINK_COUNTED, link_tag="ref")
+    fold_subtree(
+        outermost(candidates), (), visit, key_elems=candidates, counted=_LINK_COUNTED, link_tag="ref"
+    )
     # visited in reverse document order; delete in document order
     for elem in reversed(deletions):
         delete_element(elem)

@@ -17,7 +17,7 @@ from typing import Optional
 
 from .dom import Element, delete_element
 from .settings import DEFAULT_OPTIONS, ExtractionTimeout, Options, check_deadline
-from .subtree import fold_subtree
+from .subtree import fold_subtree, outermost
 from .textutils import trim
 
 DOT_SPACE = re.compile(r"\.( |$)")
@@ -26,9 +26,12 @@ DIV_SCORES = {"div", "article"}
 BLOCK_SCORES = {"pre", "td", "blockquote"}
 BAD_ELEM_SCORES = {"address", "ol", "ul", "dl", "dd", "dt", "li", "form", "aside"}
 STRUCTURE_SCORES = {"h1", "h2", "h3", "h4", "h5", "h6", "th", "header", "footer", "nav"}
-# _sanitize's targets and the descendants it counts
+# _sanitize's targets and the descendants it counts; hidden inputs are
+# also counted under their own key
 _SANITIZE_TARGETS = frozenset(("table", "ul", "div", "aside", "header", "footer", "section"))
 _SANITIZE_COUNTED = frozenset(("p", "img", "li", "embed", "input"))
+_HIDDEN_INPUT = "input:hidden"
+_SANITIZE_REFINE = {"input": lambda elem: _HIDDEN_INPUT if elem.get("type") == "hidden" else None}
 _SCORED_TAGS = frozenset(("p", "pre", "td"))
 DIV_TO_P_ELEMS = {"a", "blockquote", "dl", "div", "img", "ol", "p", "pre", "table", "ul"}
 FRAME_TAGS = {"body", "html"}
@@ -202,8 +205,9 @@ class ReadabilityExtractor:
     def _score_paragraphs(self) -> dict:
         """Score p/pre/td by text length and commas, credit their parent
         and grandparent, then scale every candidate by its link density.
-        Text and link figures of all of them come from one fold_subtree
-        walk (no mutation happens here): O(n) however deep the page."""
+        One fold_subtree walk over the outermost parents and grandparents
+        gives all the text and link figures (no mutation happens here):
+        O(n) however deep the page."""
         scored = list(self.doc.iter("p", "pre", "td"))
         near: dict = {}  # parents and grandparents: the possible candidates
         for elem in scored:
@@ -218,7 +222,7 @@ class ReadabilityExtractor:
             stats[elem] = elem_stats
             return False
 
-        fold_subtree(self.doc, _SCORED_TAGS, visit, key_elems=near, link_tag="a")
+        fold_subtree(outermost(near), _SCORED_TAGS, visit, key_elems=near, link_tag="a")
 
         candidates: dict = {}
         for elem in scored:
@@ -359,7 +363,7 @@ class ReadabilityExtractor:
             n_p = counts.get("p", 0)
             n_img = counts.get("img", 0)
             n_li = counts.get("li", 0) - 100
-            n_input = counts.get("input", 0) - counts.get("input:hidden", 0)
+            n_input = counts.get("input", 0) - counts.get(_HIDDEN_INPUT, 0)
             n_embed = counts.get("embed", 0)
             content_length = stats.length
             link_density = stats.link_chars / (content_length or 1)
@@ -396,7 +400,9 @@ class ReadabilityExtractor:
             delete_element(elem)
             return True
 
-        fold_subtree(node, _SANITIZE_TARGETS, visit, counted=_SANITIZE_COUNTED, link_tag="a")
+        fold_subtree(
+            [node], _SANITIZE_TARGETS, visit, counted=_SANITIZE_COUNTED, refine=_SANITIZE_REFINE, link_tag="a"
+        )
 
         self.doc = node
         return node

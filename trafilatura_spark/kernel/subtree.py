@@ -9,6 +9,8 @@ quadratic on deeply nested pages.  ``fold_subtree`` answers them all in one
 walk: a "key" element's stats combine the raw text of its own region (its
 subtree minus nested keys) with the stats of the nested keys, so every
 element and every text string is touched once, and the whole fold is O(n).
+Callers fold only the subtrees of the outermost keys (``outermost``), so
+the parts of the tree that hold no key are not walked.
 
 The text is never joined across keys.  It is summarised as a whitespace
 monoid that composes under concatenation and gives ``len(trim(text))``
@@ -22,7 +24,7 @@ same whitespace definition, so the counts agree with ``trim``.
 
 from __future__ import annotations
 
-from typing import Callable, Container
+from typing import Callable, Container, Iterable, Mapping
 
 from .textutils import trim
 
@@ -35,8 +37,9 @@ class SubtreeStats:
       the inner text (``lead`` is None when the text is empty);
     - ``commas``: commas in the inner text;
     - ``length``: ``len(trim(inner text))``;
-    - ``counts``: {tag: descendants with that tag}, for the fold's counted
-      tags; an ``<input type="hidden">`` also counts as "input:hidden";
+    - ``counts``: {key: descendants counted under that key}: each counted
+      descendant under its tag, and under the key its tag's ``refine``
+      function gives it (see fold_subtree);
     - ``link_chars``, ``links_filled``, ``links_short``: over descendant
       link elements, the sum of their trimmed text lengths, how many have
       non-empty trimmed text, and how many of those are shorter than 10.
@@ -111,61 +114,98 @@ class SubtreeStats:
 
 
 def _text_monoid(text: str) -> tuple:
-    "(non-space chars, words, starts non-space, ends non-space, commas) of a non-empty string."
-    tokens = text.split()
-    return sum(map(len, tokens)), len(tokens), not text[0].isspace(), not text[-1].isspace(), text.count(",")
+    """(non-space chars, words, starts non-space, ends non-space, commas) of
+    a non-empty string.  ``trim`` joins the words with single spaces, so
+    the words are its spaces plus one."""
+    trimmed = trim(text)
+    words = trimmed.count(" ") + 1 if trimmed else 0
+    return (
+        len(trimmed) - words + 1 if words else 0, words, not text[0].isspace(), not text[-1].isspace(),
+        text.count(","),
+    )
 
 
-def _count(counts: dict, elem) -> None:
+def _count(counts: dict, elem, refine: Mapping[str, Callable]) -> None:
     tag = elem.tag
     counts[tag] = counts.get(tag, 0) + 1
-    if tag == "input" and elem.get("type") == "hidden":
-        counts["input:hidden"] = counts.get("input:hidden", 0) + 1
+    if tag in refine:
+        key = refine[tag](elem)
+        if key is not None:
+            counts[key] = counts.get(key, 0) + 1
 
 
-def _credit(parent: SubtreeStats, elem, length: int, counted: Container[str], link_tag: str) -> None:
-    "Count ``elem`` itself (its inner text being ``length`` long) in its nearest key ancestor."
-    tag = elem.tag
-    if tag in counted:
-        _count(parent.counts, elem)
-    if tag == link_tag and length:
-        parent.link_chars += length
-        parent.links_filled += 1
-        if length < 10:
-            parent.links_short += 1
+def _credit_link(parent: SubtreeStats, length: int) -> None:
+    "Add a link whose inner text is ``length`` long to its nearest key ancestor's figures."
+    parent.link_chars += length
+    parent.links_filled += 1
+    if length < 10:
+        parent.links_short += 1
+
+
+def outermost(elems: Iterable) -> list:
+    """The elements of ``elems`` that have no ancestor in ``elems``, in the
+    order given.  O(n) in the tree size: the ancestor chains are climbed
+    with a memo, so no element is climbed past twice."""
+    elems = list(elems)
+    keys = set(elems)
+    covered: dict = {}  # element -> it or one of its ancestors is in keys
+    found = []
+    for elem in elems:
+        path = []
+        node = elem._parent
+        inside = False
+        while node is not None:
+            known = covered.get(node)
+            if known is not None:
+                inside = known
+                break
+            if node in keys:
+                inside = covered[node] = True
+                break
+            path.append(node)
+            node = node._parent
+        for node in path:
+            covered[node] = inside
+        if not inside:
+            found.append(elem)
+    return found
 
 
 def fold_subtree(
-    root,
+    roots: Iterable,
     key_tags: Container[str],
     visit: Callable,
     key_elems: Container = (),
     counted: Container[str] = frozenset(),
+    refine: Mapping[str, Callable] = {},
     link_tag: str = "",
 ) -> None:
     """Call ``visit(elem, stats)`` with the ``SubtreeStats`` of every key
-    element of ``root``'s subtree, ``root`` included, in reverse document
-    order: descendants before their ancestor, later siblings before
-    earlier ones.
+    element in the subtrees of ``roots``, the roots included.  The roots
+    must be disjoint subtrees; given in document order, they are visited
+    in reverse document order: descendants before their ancestor, later
+    siblings before earlier ones.
 
     An element is a key when its tag is in ``key_tags`` or it is in
     ``key_elems``.  Descendants are counted when their tag is in
-    ``counted``, and ``link_tag`` elements feed the link figures.
+    ``counted``; ``refine`` maps some counted tags to a function that
+    gives an element a second key to be counted under, or None.
+    ``link_tag`` elements feed the link figures.
     ``visit`` may delete the element it is given (only that one): it then
     returns True, and the element leaves its ancestors' stats exactly as
     if it had been deleted before the walk, its tail staying in place.
     Otherwise it returns a false value.
 
-    O(n) in the subtree size: each element is opened once, each text and
-    tail is read once, and each key's (or link's) stats are folded once
-    into its nearest key ancestor.  A childless key or link passes its
-    text up as plain text.  Texts and tails are read when their parent
-    opens, so a deletion's tail merge (dom.delete_element) is not seen
-    twice."""
+    O(n) in the size of the subtrees: each element is opened once, each
+    text and tail is read once, and each key's (or link's) stats are
+    folded once into its nearest key ancestor.  A childless key or link
+    passes its text up as plain text.  Texts and tails are read when
+    their parent opens, so a deletion's tail merge (dom.delete_element)
+    is not seen twice."""
     frame = SubtreeStats(None, False)  # the innermost open key; first a sink
     frames = [frame]
     emit = frame.parts.append
-    stack: list = [root]
+    stack: list = list(roots)
     pop = stack.pop
     push = stack.append
     stats_cls = SubtreeStats
@@ -185,13 +225,19 @@ def fold_subtree(
                 continue
             emit(item)
             frame.nested += 1
-            counts = frame.counts
-            for tag, n in item.counts.items():
-                counts[tag] = counts.get(tag, 0) + n
-            frame.link_chars += item.link_chars
-            frame.links_filled += item.links_filled
-            frame.links_short += item.links_short
-            _credit(frame, elem, item.length, counted, link_tag)
+            if item.counts:
+                counts = frame.counts
+                for tag, n in item.counts.items():
+                    counts[tag] = counts.get(tag, 0) + n
+            if item.links_filled:
+                frame.link_chars += item.link_chars
+                frame.links_filled += item.links_filled
+                frame.links_short += item.links_short
+            tag = elem.tag
+            if tag in counted:
+                _count(frame.counts, elem, refine)
+            if tag == link_tag and item.length:
+                _credit_link(frame, item.length)
             continue
         tag = item.tag
         keyed = tag in key_tags or item in key_elems
@@ -209,14 +255,17 @@ def fold_subtree(
                         continue
                 if text:
                     emit(text)
-                _credit(frame, item, length, counted, link_tag)
+                if tag in counted:
+                    _count(frame.counts, item, refine)
+                if tag == link_tag and length:
+                    _credit_link(frame, length)
                 continue
             frame = stats_cls(item, keyed)
             frames.append(frame)
             emit = frame.parts.append
             push(frame)
         elif tag in counted:
-            _count(frame.counts, item)
+            _count(frame.counts, item, refine)
         if item.text:
             push(item.text)
         for child in item._children:
