@@ -205,24 +205,22 @@ class ReadabilityExtractor:
     def _score_paragraphs(self) -> dict:
         """Score p/pre/td by text length and commas, credit their parent
         and grandparent, then scale every candidate by its link density.
-        One fold_subtree walk over the outermost parents and grandparents
-        gives all the text and link figures (no mutation happens here):
-        O(n) however deep the page."""
-        scored = list(self.doc.iter("p", "pre", "td"))
-        near: dict = {}  # parents and grandparents: the possible candidates
-        for elem in scored:
-            parent_node = elem.getparent()
-            if parent_node is not None:
-                near[parent_node] = None
-                if parent_node.getparent() is not None:
-                    near[parent_node.getparent()] = None
+        One fold_subtree walk over the outermost scored elements gives
+        their text figures; only candidates with an <a> descendant have a
+        link density above 0, and a second walk over the outermost of
+        them gives theirs (no mutation happens here).  O(n) however deep
+        the page."""
+        scored: list = []
+        links: list = []
+        for elem in self.doc.iter("p", "pre", "td", "a"):
+            (links if elem.tag == "a" else scored).append(elem)
         stats: dict = {}
 
         def visit(elem: Element, elem_stats) -> bool:
             stats[elem] = elem_stats
             return False
 
-        fold_subtree(outermost(near), _SCORED_TAGS, visit, key_elems=near, link_tag="a")
+        fold_subtree(outermost(scored), _SCORED_TAGS, visit)
 
         candidates: dict = {}
         for elem in scored:
@@ -246,9 +244,22 @@ class ReadabilityExtractor:
             if grand_parent_node is not None:
                 candidates[grand_parent_node].score += score / 2
 
-        for elem, candidate in candidates.items():
-            elem_stats = stats[elem]
-            candidate.score *= 1 - elem_stats.link_chars / (elem_stats.length or 1)
+        # the candidates above a link, each ancestor chain climbed once
+        linked: dict = {}
+        climbed: set = set()
+        for link in links:
+            node = link._parent
+            while node is not None and node not in climbed:
+                climbed.add(node)
+                if node in candidates:
+                    linked[node] = None
+                node = node._parent
+
+        def scale(elem: Element, elem_stats) -> bool:
+            candidates[elem].score *= 1 - elem_stats.link_chars / (elem_stats.length or 1)
+            return False
+
+        fold_subtree(outermost(linked), (), scale, key_elems=linked, link_tag="a")
         return candidates
 
     def _class_weight(self, elem: Element) -> float:

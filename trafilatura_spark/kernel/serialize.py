@@ -275,11 +275,12 @@ def process_element(
             if tag == "list" and in_item and _last_char(returnlist) not in ("\n", ""):
                 returnlist.append("\n")
 
-            push((element, in_cell, in_item, renders_inline))
-            if not consumes_children:
+            if not consumes_children and element._children:
+                push((element, in_cell, in_item, renders_inline))
                 for child in reversed(element._children):
                     push((child, in_cell, in_item, None))
-            continue
+                continue
+            # no children to flatten: close at once
 
         # close: the part after the children
         if not renders_inline:

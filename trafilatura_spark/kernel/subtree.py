@@ -113,6 +113,9 @@ class SubtreeStats:
         self.length = chars + words - 1 if words else 0
 
 
+_NO_COUNTS: dict = {}  # a childless key's counts; never written
+
+
 def _text_monoid(text: str) -> tuple:
     """(non-space chars, words, starts non-space, ends non-space, commas) of
     a non-empty string.  ``trim`` joins the words with single spaces, so
@@ -209,6 +212,7 @@ def fold_subtree(
     pop = stack.pop
     push = stack.append
     stats_cls = SubtreeStats
+    new_stats = object.__new__
     while stack:
         item = pop()
         cls = item.__class__
@@ -248,9 +252,12 @@ def fold_subtree(
                 text = item.text
                 length = len(trim(text)) if text else 0
                 if keyed:
-                    leaf = stats_cls(item, True)
+                    leaf = new_stats(stats_cls)
+                    leaf.elem = item
                     leaf.length = length
                     leaf.commas = text.count(",") if text else 0
+                    leaf.counts = _NO_COUNTS
+                    leaf.link_chars = leaf.links_filled = leaf.links_short = 0
                     if visit(item, leaf):
                         continue
                 if text:
@@ -266,9 +273,14 @@ def fold_subtree(
             push(frame)
         elif tag in counted:
             _count(frame.counts, item, refine)
+        children = item._children
+        if not children:  # its text is next in reverse document order
+            if item.text:
+                emit(item.text)
+            continue
         if item.text:
             push(item.text)
-        for child in item._children:
+        for child in children:
             push(child)
             if child.tail:
                 push(child.tail)
