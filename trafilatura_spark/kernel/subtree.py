@@ -118,14 +118,10 @@ _NO_COUNTS: dict = {}  # a childless key's counts; never written
 
 def _text_monoid(text: str) -> tuple:
     """(non-space chars, words, starts non-space, ends non-space, commas) of
-    a non-empty string.  ``trim`` joins the words with single spaces, so
-    the words are its spaces plus one."""
-    trimmed = trim(text)
-    words = trimmed.count(" ") + 1 if trimmed else 0
-    return (
-        len(trimmed) - words + 1 if words else 0, words, not text[0].isspace(), not text[-1].isspace(),
-        text.count(","),
-    )
+    a non-empty string.  Not through the memoised ``trim``: region texts
+    can be large and rarely repeat."""
+    tokens = text.split()
+    return sum(map(len, tokens)), len(tokens), not text[0].isspace(), not text[-1].isspace(), text.count(",")
 
 
 def _count(counts: dict, elem, refine: Mapping[str, Callable]) -> None:
