@@ -14,6 +14,10 @@ Design (SURVEY.md §7 P1, BASELINE.json north_rule):
 - preemptive per-document deadline replacing the reference CLI's 30 s/file
   process kill (cli_utils.py / settings.cfg:37): the cascade aborts
   cooperatively at stage/element checkpoints, yielding tier='timeout'.
+- per-partition worker hygiene: every batch function drops the Python
+  worker's zip-archive import finders when its partition ends
+  (operators/worker.py), so the next task's import-cache invalidation
+  does not re-read pyspark.zip once per sub-package.
 """
 
 from __future__ import annotations
@@ -32,6 +36,7 @@ from pyspark.sql.types import (
 )
 
 from ..kernel import DEFAULT_OPTIONS, Options, bare_extract
+from .worker import partition_scoped
 
 # fixed wrapping convention (FIXTURES.md): load_html rejects bare
 # single-block fragments, so turns are wrapped identically everywhere
@@ -126,6 +131,23 @@ def extract_one(text: Optional[str], options: Options, timeout: float = DEFAULT_
     return result.text, result.tier, result.chars_kept
 
 
+def batch_slices(pdf: pd.DataFrame, max_batch_chars: int) -> Iterator[pd.DataFrame]:
+    """``pdf`` in consecutive row slices whose summed text length stays
+    near ``max_batch_chars``: a slice ends after the row that takes it
+    over the limit, or at the end of the batch.  Null texts count 0.
+    Bounds the Python-side memory of one slice's results (the reference's
+    20 MB per-doc gate times a small factor; SURVEY.md §7 hard part 6)."""
+    n = len(pdf)
+    ends = pdf["text"].str.len().to_numpy(dtype="int64", na_value=0).cumsum()
+    start = 0
+    while start < n:
+        base = ends[start - 1] if start else 0
+        over = int(ends.searchsorted(base + max_batch_chars, side="right"))
+        end = min(n, max(start, over) + 1)
+        yield pdf.iloc[start:end]
+        start = end
+
+
 def make_extract_batch_fn(
     options: Options = DEFAULT_OPTIONS,
     passthrough_cols: Optional[list] = None,
@@ -136,24 +158,14 @@ def make_extract_batch_fn(
     (extracted_text, tier, chars_kept).
 
     ``max_batch_chars`` bounds Python-side memory: an Arrow batch whose
-    summed text length exceeds it is processed in slices (the reference's
-    20 MB per-doc gate times a small factor; SURVEY.md §7 hard part 6).
+    summed text length exceeds it is processed in slices (batch_slices).
     """
     passthrough = passthrough_cols or ["conv_id", "turn_idx"]
 
+    @partition_scoped
     def extract_batch(iterator: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in iterator:
-            texts = pdf["text"]
-            # adaptive slicing by accumulated length keeps peak RSS bounded
-            start = 0
-            n = len(pdf)
-            while start < n:
-                acc = 0
-                end = start
-                while end < n and acc <= max_batch_chars:
-                    acc += len(texts.iloc[end]) if isinstance(texts.iloc[end], str) else 0
-                    end += 1
-                chunk = pdf.iloc[start:end]
+            for chunk in batch_slices(pdf, max_batch_chars):
                 extracted, tiers, kept = [], [], []
                 for text in chunk["text"]:
                     etext, tier, chars = extract_one(text, options, timeout)
@@ -165,7 +177,6 @@ def make_extract_batch_fn(
                 out["tier"] = tiers
                 out["chars_kept"] = pd.array(kept, dtype="int32")
                 yield out
-                start = end
 
     return extract_batch
 
@@ -240,45 +251,49 @@ def make_extract_with_metadata_batch_fn(
     options: Options = DEFAULT_OPTIONS,
     passthrough_cols: Optional[list] = None,
     timeout: float = DEFAULT_TIMEOUT_SECS,
+    max_batch_chars: int = 32_000_000,
 ):
     """Batch function emitting extraction AND metadata columns in one
     mapInPandas pass — the reference's bare_extraction(with_metadata=True)
     shape.  One table scan, one Arrow crossing, and ONE HTML PARSE per
     document serve both outputs: bare_extract runs with with_metadata set
     and returns the metadata object extracted from the same parsed tree
-    (running the two standalone operators costs two of each)."""
+    (running the two standalone operators costs two of each).  Batches
+    are sliced by ``max_batch_chars`` as in make_extract_batch_fn."""
     from .metadata_op import METADATA_FIELDS
 
     passthrough = passthrough_cols or ["conv_id", "turn_idx"]
     options = options.copy(with_metadata=True)
 
+    @partition_scoped
     def batch(iterator: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in iterator:
-            extracted, tiers, kept = [], [], []
-            meta_cols: dict = {name: [] for name, _ in METADATA_FIELDS}
-            meta_cols["categories_joined"] = []
-            meta_cols["tags_joined"] = []
-            for text in pdf["text"]:
-                result = extract_one_result(text, options, timeout)
-                extracted.append(result.text)
-                tiers.append(result.tier)
-                kept.append(result.chars_kept)
-                meta = result.metadata
-                for name, _ in METADATA_FIELDS:
-                    meta_cols[name].append(getattr(meta, name, None) if meta else None)
-                meta_cols["categories_joined"].append(
-                    ",".join(meta.categories) if meta and meta.categories else None
-                )
-                meta_cols["tags_joined"].append(
-                    ",".join(meta.tags) if meta and meta.tags else None
-                )
-            out = pdf[passthrough].copy()
-            out["extracted_text"] = extracted
-            out["tier"] = tiers
-            out["chars_kept"] = pd.array(kept, dtype="int32")
-            for key, values in meta_cols.items():
-                out[key] = values
-            yield out
+            for chunk in batch_slices(pdf, max_batch_chars):
+                extracted, tiers, kept = [], [], []
+                meta_cols: dict = {name: [] for name, _ in METADATA_FIELDS}
+                meta_cols["categories_joined"] = []
+                meta_cols["tags_joined"] = []
+                for text in chunk["text"]:
+                    result = extract_one_result(text, options, timeout)
+                    extracted.append(result.text)
+                    tiers.append(result.tier)
+                    kept.append(result.chars_kept)
+                    meta = result.metadata
+                    for name, _ in METADATA_FIELDS:
+                        meta_cols[name].append(getattr(meta, name, None) if meta else None)
+                    meta_cols["categories_joined"].append(
+                        ",".join(meta.categories) if meta and meta.categories else None
+                    )
+                    meta_cols["tags_joined"].append(
+                        ",".join(meta.tags) if meta and meta.tags else None
+                    )
+                out = chunk[passthrough].copy()
+                out["extracted_text"] = extracted
+                out["tier"] = tiers
+                out["chars_kept"] = pd.array(kept, dtype="int32")
+                for key, values in meta_cols.items():
+                    out[key] = values
+                yield out
 
     return batch
 

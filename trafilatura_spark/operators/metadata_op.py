@@ -15,6 +15,7 @@ from pyspark.sql.types import ArrayType, StringType, StructField, StructType
 
 from ..kernel.metadata import extract_metadata
 from .extract import wrap_if_fragment  # noqa: F401  (canonical home: extract.py)
+from .worker import partition_scoped
 
 METADATA_FIELDS = [
     ("title", StringType()),
@@ -41,16 +42,29 @@ def metadata_schema(df: DataFrame, passthrough_cols: Optional[list] = None) -> S
     return StructType(fields)
 
 
+def _metadata_or_none(text):
+    """The metadata of one turn, or None for a null turn or one whose
+    extraction raises: a bad document yields null metadata columns, the
+    way extract_one_result yields tier 'error', instead of failing the task."""
+    if not isinstance(text, str):
+        return None
+    try:
+        return extract_metadata(wrap_if_fragment(text))
+    except Exception:
+        return None
+
+
 def make_metadata_batch_fn(passthrough_cols: Optional[list] = None):
     passthrough = passthrough_cols or ["conv_id", "turn_idx"]
 
+    @partition_scoped
     def metadata_batch(iterator: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in iterator:
             records = {name: [] for name, _ in METADATA_FIELDS}
             records["categories"] = []
             records["tags"] = []
             for text in pdf["text"]:
-                meta = extract_metadata(wrap_if_fragment(text)) if isinstance(text, str) else None
+                meta = _metadata_or_none(text)
                 for name, _ in METADATA_FIELDS:
                     records[name].append(getattr(meta, name, None) if meta else None)
                 records["categories"].append(list(meta.categories) if meta else None)

@@ -125,23 +125,11 @@ def lang_id_sql(table: str = "documents", id_col: str = "doc_id", text_col: str 
     """
 
 
-def lang_id_ngram(df: DataFrame, id_col: str = "doc_id", text_col: str = "text") -> DataFrame:
-    """Character-n-gram language ID over ~53 languages — the kernel's
-    Cavnar-Trenkle profile classifier (kernel/langprofiles.py) run as an
-    Arrow-batched mapInPandas column.  Complements the JVM-side 17-language
-    `lang_id` (which stays the cheap whole-table sweep with an exact
-    DuckDB twin); this variant is the full-coverage path, used when the
-    corpus is broader than the marker-word vocabulary.  Oracle: the rank
-    arithmetic has no SQL twin, so the DuckDB side joins the pinned
-    fixture parquet (tools/gen_langid_fixture.py) — a value match proves
-    the live run reproduces the generation-time labels exactly."""
-    import pandas as pd
-    from pyspark.sql.types import StringType, StructField, StructType
+def make_lang_id_batch_fn(id_col: str = "doc_id", text_col: str = "text"):
+    "The mapInPandas function of lang_id_ngram: (id_col, pred_lang) per row."
+    from .worker import partition_scoped
 
-    schema = StructType(
-        [df.schema[id_col], StructField("pred_lang", StringType(), True)]
-    )
-
+    @partition_scoped
     def batch(iterator):
         from ..kernel.langid import classify_language
 
@@ -153,8 +141,27 @@ def lang_id_ngram(df: DataFrame, id_col: str = "doc_id", text_col: str = "text")
             ]
             yield out
 
+    return batch
+
+
+def lang_id_ngram(df: DataFrame, id_col: str = "doc_id", text_col: str = "text") -> DataFrame:
+    """Character-n-gram language ID over ~53 languages — the kernel's
+    Cavnar-Trenkle profile classifier (kernel/langprofiles.py) run as an
+    Arrow-batched mapInPandas column.  Complements the JVM-side 17-language
+    `lang_id` (which stays the cheap whole-table sweep with an exact
+    DuckDB twin); this variant is the full-coverage path, used when the
+    corpus is broader than the marker-word vocabulary.  Oracle: the rank
+    arithmetic has no SQL twin, so the DuckDB side joins the pinned
+    fixture parquet (tools/gen_langid_fixture.py) — a value match proves
+    the live run reproduces the generation-time labels exactly."""
+    from pyspark.sql.types import StringType, StructField, StructType
+
     from .balance import spread_for_compute
 
+    schema = StructType(
+        [df.schema[id_col], StructField("pred_lang", StringType(), True)]
+    )
+    batch = make_lang_id_batch_fn(id_col, text_col)
     return spread_for_compute(df.select(id_col, text_col)).mapInPandas(batch, schema=schema)
 
 
